@@ -7,7 +7,7 @@ object Bench {
     * with only the aggregate's needs, and column pruning then DELETES any
     * expensive operator whose output is projection-only — 22 of the
     * declared queries lost a Window or a whole join under count() (r16
-    * CountPlan audit; the as-of family benched FLAT 0.4 s from sf10 to
+    * count-plan audit; the as-of family benched FLAT 0.4 s from sf10 to
     * sf30 — the tell). Package-visible so PlanShapeSpec ("bench
     * instrument pin") can pin the
     * instrument: the spec executes sentinel pruning victims through this
@@ -122,16 +122,10 @@ object Bench {
       System.gc()
       t
     }
-    // Order-sensitivity probe (SPARK_GRAFT_BENCH_REVERSE=1): run the
-    // surface back-to-front. If late-order queries inflate in BOTH
-    // directions, state accumulates with bench position, not query
-    // identity — the diagnostic for block-manager pressure (SCALE.md).
-    val ordered = if (sys.env.get("SPARK_GRAFT_BENCH_REVERSE").contains("1"))
-      selected.toSeq.reverse else selected.toSeq
     val calPre = calibrate()
     val calIoPre = calibrateIo()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = ordered.flatMap { case (name, fn) =>
+    val results = selected.toSeq.flatMap { case (name, fn) =>
       // Free the previous query's localCheckpoint blocks, then a GC
       // breather so one query's garbage doesn't bill the next one's
       // timed region (8g heap; round-2 driver run showed a 10× outlier on

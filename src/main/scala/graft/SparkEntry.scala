@@ -1410,21 +1410,10 @@ object SparkEntry {
 
     "ma_crossover" ->
       s"""WITH candles AS (${Tables.candlesSql}),
-         |ma AS (
-         |  SELECT symbol, ts,
-         |    round(avg(close) OVER w5, 6) AS short_ma,
-         |    round(avg(close) OVER w20, 6) AS long_ma,
-         |    avg(close) OVER w5 AS s_raw, avg(close) OVER w20 AS l_raw
-         |  FROM candles
-         |  WINDOW
-         |    w5 AS (PARTITION BY symbol ORDER BY ts ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-         |    w20 AS (PARTITION BY symbol ORDER BY ts ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT symbol, ts, short_ma, long_ma,
-         |  coalesce(lag(s_raw) OVER w <= lag(l_raw) OVER w AND s_raw > l_raw, false) AS buy_signal,
-         |  coalesce(lag(s_raw) OVER w >= lag(l_raw) OVER w AND s_raw < l_raw, false) AS sell_signal
-         |FROM ma
-         |WINDOW w AS (PARTITION BY symbol ORDER BY ts)""".stripMargin,
+         |x AS ($crossoverSql)
+         |SELECT symbol, ts, round(short_ma, 6) AS short_ma,
+         |  round(long_ma, 6) AS long_ma, buy_signal, sell_signal
+         |FROM x""".stripMargin,
 
     "w5_stride_signals" ->
       s"""WITH candles AS (${Tables.candlesSql}),
@@ -2254,6 +2243,38 @@ object SparkEntry {
          |FROM positions GROUP BY symbol""".stripMargin
   )
 
+  /** DuckDB mirror of [[TradingOps.movingAverages]] (5, 20) plus
+    * [[TradingOps.crossoverSignals]] over a `candles` CTE: the double
+    * means for display, and the crossover decided from the SAME exact
+    * DECIMAL window sums cross-multiplied by the window counts, with the
+    * engine's types. The one fragment behind the `ma_crossover` oracle
+    * and [[backtestPositionsSql]], so both gates decide ties exactly as
+    * the engine does — no tolerance.
+    */
+  private def crossoverSql: String = {
+    val (price, cnt) = (TradingOps.MaPrice, TradingOps.MaCount)
+    def sum(w: String) = s"sum(CAST(close AS $price)) OVER $w"
+    def n(w: String) = s"CAST(count(close) OVER $w AS $cnt)"
+    s"""SELECT symbol, ts, close, short_ma, long_ma,
+       |  coalesce(lag(ma_side) OVER w <= 0 AND ma_side > 0, false) AS buy_signal,
+       |  coalesce(lag(ma_side) OVER w >= 0 AND ma_side < 0, false) AS sell_signal
+       |FROM (
+       |  SELECT symbol, ts, close, short_ma, long_ma,
+       |    CASE WHEN s > l THEN 1 WHEN s < l THEN -1 WHEN s = l THEN 0 END AS ma_side
+       |  FROM (
+       |    SELECT symbol, ts, close,
+       |      avg(close) OVER ws AS short_ma, avg(close) OVER wl AS long_ma,
+       |      ${sum("ws")} * ${n("wl")} AS s,
+       |      ${sum("wl")} * ${n("ws")} AS l
+       |    FROM candles
+       |    WINDOW
+       |      ws AS (PARTITION BY symbol ORDER BY ts ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
+       |      wl AS (PARTITION BY symbol ORDER BY ts ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
+       |  )
+       |)
+       |WINDOW w AS (PARTITION BY symbol ORDER BY ts)""".stripMargin
+  }
+
   /** DuckDB mirror of the §2.6 stateful fold. Although the fold holds
     * budget/position state, its trace is SQL-expressible because a death
     * cross unconditionally closes any open position — so the machine is
@@ -2285,23 +2306,11 @@ object SparkEntry {
     }
     val cap = maxTrades.map(k => s"WHERE o.open_rank <= $k").getOrElse("")
     s"""WITH candles AS (${Tables.candlesSql}),
-       |ma AS (
-       |  SELECT symbol, ts, close,
-       |    avg(close) OVER (PARTITION BY symbol ORDER BY ts ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS s,
-       |    avg(close) OVER (PARTITION BY symbol ORDER BY ts ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS l
-       |  FROM candles
-       |),
-       |lagged AS (
-       |  SELECT symbol, ts, close, s, l,
-       |    lag(s) OVER w AS ps, lag(l) OVER w AS pl,
-       |    row_number() OVER w AS rn
-       |  FROM ma WINDOW w AS (PARTITION BY symbol ORDER BY ts)
-       |),
+       |x AS ($crossoverSql),
        |ev AS (
        |  SELECT symbol, ts, close,
-       |    CASE WHEN ps <= pl AND s > l THEN 'B' ELSE 'S' END AS kind
-       |  FROM lagged
-       |  WHERE rn > 1 AND ((ps <= pl AND s > l) OR (ps >= pl AND s < l))
+       |    CASE WHEN buy_signal THEN 'B' ELSE 'S' END AS kind
+       |  FROM x WHERE buy_signal OR sell_signal
        |),
        |grp AS (
        |  SELECT *, count(CASE WHEN kind = 'S' THEN 1 END) OVER

@@ -138,7 +138,7 @@ object Tables {
     * `spark.sql.files.maxPartitionBytes`) tasks at most, and row-group
     * granularity can make it even lower (the driver fixtures are one
     * row group per table, so every scan-rooted pipeline runs its whole
-    * expression chain on ONE task regardless of cores — StageProbe r18:
+    * expression chain on ONE task regardless of cores — stage probe r18:
     * dedup_keep_best's two hottest stages ran 1 and 2 tasks on a 32-slot
     * box). The guide's fix for unsplittable/small inputs is to
     * repartition right after the read (guide §2.5 "input skew"); this

@@ -293,7 +293,7 @@ object TextAnalysis {
     // see tfidfTopTerms. Second session also tried tokenize-BEFORE-the-
     // widen (single-task tokenize once, token-array exchange reused by
     // all three branches): the skewed single-task stages did disappear
-    // (StageProbe: 0.68 + 0.52 s single-task → 0.33 s tokenize + three
+    // (stage probe: 0.68 + 0.52 s single-task → 0.33 s tokenize + three
     // 32-wide branch stages) but the bench was FLAT (0.88 → 0.85
     // min-of-5, same window) — branch scheduling overhead eats the
     // parallel gain at this size, and above the widen threshold the

@@ -53,19 +53,27 @@ object Backtest {
       exit_price: Option[Double],
       shares: Double)
 
-  /** Non-private: Catalyst's generated deserializer must access it. */
-  case class MaRow(
+  /** One candle with its crossover decision
+    * ([[TradingOps.crossoverSignals]]). Non-private: Catalyst's generated
+    * deserializer must access it.
+    */
+  case class SignalRow(
       symbol: String, ts: Timestamp, close: Double,
-      short_ma: Double, long_ma: Double)
+      buy_signal: Boolean, sell_signal: Boolean)
+
+  /** The fold's input: candles with the shared crossover signals. */
+  private[operators] def signals(candles: DataFrame, cfg: Config): DataFrame =
+    TradingOps.crossoverSignals(
+      TradingOps.movingAverages(candles, cfg.shortN, cfg.longN))
 
   /** All trade positions, one ordered fold per symbol. */
   def positions(candles: DataFrame, cfg: Config = Config()): Dataset[Position] = {
     val spark = candles.sparkSession
     import spark.implicits._
-    TradingOps.movingAverages(candles, cfg.shortN, cfg.longN)
+    signals(candles, cfg)
       .select(col("symbol"), col("ts"), col("close"),
-              col("short_ma"), col("long_ma"))
-      .as[MaRow]
+              col("buy_signal"), col("sell_signal"))
+      .as[SignalRow]
       .groupByKey(_.symbol)
       .flatMapSortedGroups(col("ts")) { (symbol, rows) => fold(symbol, rows, cfg) }
   }
@@ -93,19 +101,18 @@ object Backtest {
         round(col("pnl") / lit(cfg.initialBudget) * 100.0, 6).as("roi"))
 
   private def fold(
-      symbol: String, rows: Iterator[MaRow], cfg: Config): Iterator[Position] =
+      symbol: String, rows: Iterator[SignalRow], cfg: Config): Iterator[Position] =
     foldCore(rows, cfg)._2.iterator.map(p => p.copy(symbol = symbol))
 
   /** The state machine itself, symbol-agnostic: consumes time-ordered rows,
     * returns (final budget, positions). Shared by the flatMapSortedGroups
-    * fold and the SQL-callable Aggregator.
+    * fold and the SQL-callable Aggregator. A series' first row never
+    * signals (no lag), which is the reference loop's start at i=1.
     */
   private[operators] def foldCore(
-      rows: Iterator[MaRow], cfg: Config): (Double, Seq[Position]) = {
-    if (!rows.hasNext) return (cfg.initialBudget, Nil)
-    var prev = rows.next()
-    var lastTs = prev.ts
-    var lastClose = prev.close
+      rows: Iterator[SignalRow], cfg: Config): (Double, Seq[Position]) = {
+    var lastTs: Timestamp = null
+    var lastClose = 0.0
     var inPos = false
     var entryTs: Timestamp = null
     var entryPrice = 0.0
@@ -119,8 +126,7 @@ object Backtest {
       lastClose = cur.close
       if (!stopped && cfg.maxTrades.exists(trades >= _)) stopped = true
       if (!stopped) {
-        if (!inPos && prev.short_ma <= prev.long_ma &&
-            cur.short_ma > cur.long_ma) {
+        if (!inPos && cur.buy_signal) {
           if (budget >= cfg.perTrade) {
             inPos = true
             entryTs = cur.ts
@@ -128,15 +134,13 @@ object Backtest {
             trades += 1
             budget -= cfg.perTrade
           }
-        } else if (inPos && prev.short_ma >= prev.long_ma &&
-                   cur.short_ma < cur.long_ma) {
+        } else if (inPos && cur.sell_signal) {
           inPos = false
           budget += cfg.perTrade / entryPrice * cur.close
           out += Position(null, entryTs, entryPrice,
             Some(cur.ts), Some(cur.close), cfg.perTrade / entryPrice)
         }
       }
-      prev = cur
     }
     if (inPos) {
       budget += cfg.perTrade / entryPrice * lastClose

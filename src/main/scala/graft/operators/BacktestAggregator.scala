@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-import graft.operators.Backtest.{Config, MaRow}
+import graft.operators.Backtest.{Config, SignalRow}
 
 /** SQL-callable surface for the §2.6 backtest (SURVEY.md §7 module 5,
   * option 2): a typed `Aggregator` usable as a UDAF inside a plain
@@ -23,7 +23,7 @@ import graft.operators.Backtest.{Config, MaRow}
 object BacktestAggregator {
 
   case class BtIn(ts: Timestamp, close: Double,
-      short_ma: Double, long_ma: Double)
+      buy_signal: Boolean, sell_signal: Boolean)
   case class BtOut(num_trades: Long, final_value: Double, roi: Double)
 
   class BacktestUdaf(cfg: Config)
@@ -33,7 +33,7 @@ object BacktestAggregator {
     override def merge(x: List[BtIn], y: List[BtIn]): List[BtIn] = x ::: y
     override def finish(b: List[BtIn]): BtOut = {
       val rows = b.sortBy(_.ts.getTime).iterator
-        .map(r => MaRow(null, r.ts, r.close, r.short_ma, r.long_ma))
+        .map(r => SignalRow(null, r.ts, r.close, r.buy_signal, r.sell_signal))
       val (_, positions) = Backtest.foldCore(rows, cfg)
       // identical arithmetic path to Backtest.summary: per-position term
       // cast to DECIMAL(·,10) HALF_UP, exact sum, back to double, then
@@ -58,10 +58,10 @@ object BacktestAggregator {
     */
   def summaryViaUdaf(candles: DataFrame, cfg: Config = Config()): DataFrame = {
     val agg = udaf(new BacktestUdaf(cfg))
-    TradingOps.movingAverages(candles, cfg.shortN, cfg.longN)
+    Backtest.signals(candles, cfg)
       .groupBy(col("symbol"))
-      .agg(agg(col("ts"), col("close"), col("short_ma"), col("long_ma"))
-        .as("r"))
+      .agg(agg(col("ts"), col("close"), col("buy_signal"),
+        col("sell_signal")).as("r"))
       .filter(col("r.num_trades") > 0)
       .select(col("symbol"),
         col("r.num_trades").as("num_trades"),

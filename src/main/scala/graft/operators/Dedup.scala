@@ -75,7 +75,7 @@ object Dedup {
     GraftFunctions.register(docs.sparkSession)
     // widenCpu: the tokenize→shingle→md5 chain is the pipeline's CPU,
     // and it runs INSIDE the scan stage — split-bound parallelism, one
-    // task on single-row-group fixtures (StageProbe r18). Widen only
+    // task on single-row-group fixtures (stage probe r18). Widen only
     // when the scan provably can't reach the session's slots; no-op at
     // production scale (see Tables.widenCpu).
     graft.Tables.widenCpu(docs)
@@ -152,7 +152,7 @@ object Dedup {
     // Keyed widen BEFORE the group (r18): the pair-explode + size prune
     // + count partials run in the stage AFTER the groupBy's exchange,
     // and AQE byte-coalesced that stage to 4 tasks at bench scale
-    // (StageProbe: 1.07 s of the query's 3.9 s on 4 tasks — bytes are
+    // (stage probe: 1.07 s of the query's 3.9 s on 4 tasks — bytes are
     // the wrong proxy for the df-quadratic combination explode). The
     // explicit REPARTITION_BY_NUM exchange is exempt from coalescing
     // and satisfies groupBy(shash)'s distribution, so it REPLACES the
@@ -527,7 +527,7 @@ object Dedup {
     GraftFunctions.register(docs.sparkSession)
     // widenCpu (r18, second session): the tokenize + k-gram posexplode
     // chain is this query's CPU and runs INSIDE the scan stage — one
-    // task on single-row-group fixtures (StageProbe: 0.82 of 1.33 s on
+    // task on single-row-group fixtures (stage probe: 0.82 of 1.33 s on
     // ONE task). Keyless round-robin, same rationale as shingleTable;
     // the df/island windows re-key on shash/doc_id right after, so
     // results are bit-identical, and the PlanShapeSpec pin (one

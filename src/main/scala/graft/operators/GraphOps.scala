@@ -49,7 +49,7 @@ object GraphOps {
     // per lineitem row, so the pair distinct's hash aggregate holds
     // ≤ |lineitem|/width rows of state per task. At fixed session
     // width 32 that aggregate was the query's REAL cost at factor 100
-    // (r18 StageProbe: the two build stages spilled ~9 GB mem + 1 GB
+    // (r18 stage probe: the two build stages spilled ~9 GB mem + 1 GB
     // disk each and took 30 of 98 s, while the auto-widened iterations
     // ran clean — the r17 verdict's "iteration loop dominates" guess
     // was wrong). |lineitem| is a footer-cheap memoized count; identity
@@ -158,7 +158,7 @@ object GraphOps {
     // (r18): `rk div deg` is a per-src value, so the former edge-sized
     // degree-attach join + its DISK_ONLY checkpoint were paying an
     // |E|-row join, an |E|-row disk write (20+ s and a third of the
-    // build's scratch at factor 100 — StageProbe), and a wider edge
+    // build's scratch at factor 100 — stage probe), and a wider edge
     // row in every iteration exchange, for a value a |V|-row
     // (rank ⋈ deg) join computes each round at node cost.
     //
@@ -304,7 +304,7 @@ object GraphOps {
     * neighborhoods are out-adjacency, so the per-edge work is O(√m)
     * under ANY skew, and — unlike the classic wedge/semi-join form —
     * the O(m^1.5) wedge set is never materialized: at sf0.1 that was
-    * 41 M wedge rows and 6 s of a 7.5 s query (PerfProbe breakdown);
+    * 41 M wedge rows and 6 s of a 7.5 s query (per-stage breakdown, SCALE.md);
     * the intersection core runs in under 1 s for the identical count.
     * The total is independent of the orientation key — the DuckDB
     * oracle uses plain id-orientation and must produce the identical
@@ -353,7 +353,7 @@ object GraphOps {
     // Explicit width ALWAYS (r18): the per-order pair explode and the
     // pair distinct are CPU-dense (C(n,2) struct fan-out per order), and
     // AQE's byte-based coalescing squeezed both to ~4 tasks at bench
-    // scale (StageProbe: 1.2 s of the query on 3-4 tasks). An explicit
+    // scale (stage probe: 1.2 s of the query on 3-4 tasks). An explicit
     // repartition count is exempt from coalescing, the groupBy/distinct
     // reuse the partitioning (no extra exchange), and width stays the
     // |E|-proportional rule above the session width — so at scale the
@@ -593,7 +593,7 @@ object GraphOps {
       // orientation), materialized because both attaches below read it;
       // array-carrying and therefore DISK_ONLY above the cap.
       // Above the cap the arrays are SORTED: the dst exchange below is
-      // the query's disk bill (23.5 GB at factor 100 — r17 StageProbe),
+      // the query's disk bill (23.5 GB at factor 100 — r17 stage probe),
       // and codec ratio on packed (deg<<32|id) longs is locality-bound —
       // sorted runs share high bytes and compress several-fold better
       // than collect_list's arrival order. Sorting is one node-sized

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -91,29 +91,58 @@ object TradingOps {
     * (/root/reference/main.py:403-404). `rowsBetween(-(n-1), 0)` with Spark's
     * natural shrinking frame at the partition head exactly reproduces pandas
     * `rolling(n, min_periods=1)` — no null-padding emulation (SURVEY.md §4).
+    *
+    * `ma_side` is the sign of `short_ma − long_ma` (1, 0, −1), decided
+    * EXACTLY: the two DOUBLE means of a cent-priced series are often
+    * mathematically equal yet differ in the last bit, and that bit
+    * differs between engines (Spark and DuckDB sum a frame differently),
+    * so comparing the doubles flips crossovers on ties. Instead each
+    * window's DECIMAL sum is cross-multiplied by the other window's
+    * count: `Σs·nl` vs `Σl·ns` compares `Σs/ns` with `Σl/nl` with no
+    * division and no rounding. This column is the ONE crossover
+    * decision: [[crossoverSignals]] reads it, and [[Backtest]] and
+    * [[BacktestAggregator]] fold those signals.
     */
-  def movingAverages(df: DataFrame, shortN: Int, longN: Int): DataFrame =
-    df.withColumn("short_ma",
-        avg(col("close")).over(bySymbolTs.rowsBetween(-(shortN - 1), 0)))
-      .withColumn("long_ma",
-        avg(col("close")).over(bySymbolTs.rowsBetween(-(longN - 1), 0)))
+  def movingAverages(df: DataFrame, shortN: Int, longN: Int): DataFrame = {
+    val short = bySymbolTs.rowsBetween(-(shortN - 1), 0)
+    val long = bySymbolTs.rowsBetween(-(longN - 1), 0)
+    df.withColumn("short_ma", avg(col("close")).over(short))
+      .withColumn("long_ma", avg(col("close")).over(long))
+      .withColumn("ma_side", maSide(short, long))
+  }
 
   /** Reference window sizes (main.py:403-404). */
   def movingAverages(df: DataFrame): DataFrame = movingAverages(df, 5, 20)
 
-  /** W3/W4 — lag pair + crossover predicates
+  /** Price type of the exact crossover decision: any price below 10^10
+    * to 8 decimals (a satoshi). Its window sums are DECIMAL(28,8), and a
+    * sum times a DECIMAL(9,0) count is DECIMAL(38,8) — inside Spark's
+    * maximum precision, so no operand is ever rounded. The DuckDB oracle
+    * ([[graft.SparkEntry]]'s crossover fragment) casts to the same types.
+    */
+  private[graft] val MaPrice = "decimal(18,8)"
+  private[graft] val MaCount = "decimal(9,0)"
+
+  private def maSide(short: WindowSpec, long: WindowSpec): Column = {
+    val price = col("close").cast(MaPrice)
+    def n(w: WindowSpec) = count(col("close")).over(w).cast(MaCount)
+    val s = sum(price).over(short) * n(long)
+    val l = sum(price).over(long) * n(short)
+    when(s > l, 1).when(s < l, -1).when(s === l, 0)
+  }
+
+  /** W3/W4 — crossover predicates over [[movingAverages]]' `ma_side`
     * (/root/reference/main.py:409-423): golden cross (buy) =
     * prev_short ≤ prev_long ∧ short > long; death cross (sell) = mirrored.
     * First row of each series has no lag ⇒ null ⇒ false, matching the
     * reference loop starting at i=1.
     */
   def crossoverSignals(df: DataFrame): DataFrame = {
-    val prevS = lag(col("short_ma"), 1).over(bySymbolTs)
-    val prevL = lag(col("long_ma"), 1).over(bySymbolTs)
+    val prev = lag(col("ma_side"), 1).over(bySymbolTs)
     df.withColumn("buy_signal",
-        coalesce(prevS <= prevL && col("short_ma") > col("long_ma"), lit(false)))
+        coalesce(prev <= 0 && col("ma_side") > 0, lit(false)))
       .withColumn("sell_signal",
-        coalesce(prevS >= prevL && col("short_ma") < col("long_ma"), lit(false)))
+        coalesce(prev >= 0 && col("ma_side") < 0, lit(false)))
   }
 
   /** W6 — first K rows chronologically, per symbol

@@ -6,21 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class HarnessSpec extends AnyFunSuite {
 
   test("oracle SQL strings survive JSON escaping round-trip") {
-    // replicate Verify.q exactly
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val q = Verify.jsonString _
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     SparkEntry.oracleSql.foreach { case (k, v) =>
       val parsed = mapper.readTree(s"{${q(k)}: ${q(v)}}")
       assert(parsed.get(k).asText() == v, s"escape mangled oracle for $k")
     }
+    // every control char, not only the ones today's oracles happen to use
+    val nasty = (0 until 32).map(_.toChar).mkString + "\"\\ end"
+    assert(mapper.readTree(q(nasty)).asText() == nasty)
   }
 
   test("SURVEY §8.1 catalog matches SparkEntry.queries (regen guard)") {
@@ -43,6 +37,42 @@ class HarnessSpec extends AnyFunSuite {
       s"stale §8.1: missing ${(declared -- listed).toSeq.sorted}, " +
         s"extra ${(listed -- declared).toSeq.sorted} - run " +
         "python3 tools/gen_catalog.py")
+  }
+
+  test("every main under src/main/scala is a documented harness") {
+    // README's layout section lists the harness mains under
+    // "harness mains"; a new one-off probe main cannot land without
+    // being listed there (or folded into graft.Probe)
+    val readme = new java.io.File("README.md")
+    val root = new java.io.File("src/main/scala")
+    assume(readme.isFile && root.isDirectory,
+      "README.md / src/main/scala not present in test cwd")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    def read(f: java.io.File): String = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString finally src.close()
+    }
+    val objectDecl = """(?m)^\s*object\s+(\w+)""".r
+    val mains = files(root).flatMap { f =>
+      val text = read(f)
+      val objects = objectDecl.findAllMatchIn(text).toSeq
+      "def main\\(".r.findAllMatchIn(text).map { m =>
+        objects.takeWhile(_.start < m.start).last.group(1)
+      }
+    }.toSet
+    val lines = read(readme).linesIterator.toVector
+    val start = lines.indexWhere(_.trim.startsWith("harness mains"))
+    assert(start >= 0, "README.md layout has no 'harness mains' list")
+    val entry = """^    (\w+(?: / \w+)*)(?:\s{2,}.*)?$""".r
+    val listed = lines.drop(start + 1)
+      .takeWhile(l => l.startsWith("    "))
+      .collect { case entry(names) => names.split(" / ").toSeq }
+      .flatten.toSet
+    assert(mains == listed,
+      s"undocumented mains ${(mains -- listed).toSeq.sorted}, " +
+        s"listed but gone ${(listed -- mains).toSeq.sorted}")
   }
 
   test("auto io codec: declared SFs stay lz4 byte-identical; the " +

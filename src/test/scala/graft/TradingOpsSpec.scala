@@ -75,6 +75,33 @@ class TradingOpsSpec extends SparkSpec {
     assert(got.toSeq == Seq((2.0, 2.0), (3.0, 3.0), (5.0, 4.0), (7.0, 6.0)))
   }
 
+  test("crossover ties on cent prices are decided exactly (no double flip)") {
+    // Row 3 of each series is a mathematical tie: short (w=2) and long
+    // (w=3) means are both 54.05 for "a" and 77.29 for "b". The double
+    // means differ in the last bit (54.05 vs 54.04999999999999, and
+    // 77.28999999999999 vs 77.29), which used to fire a golden cross on
+    // "a" and a death cross on "b" out of a tie.
+    val df = candleFrame(Map(
+      "a" -> Seq(59.05, 54.05, 25.71, 82.39),
+      "b" -> Seq(72.29, 77.29, 75.02, 79.56)))
+    val signals = TradingOps.crossoverSignals(
+      TradingOps.movingAverages(df, 2, 3)).orderBy("symbol", "ts")
+    val got = signals.select("symbol", "buy_signal", "sell_signal")
+      .collect().map(r => (r.getString(0), r.getBoolean(1), r.getBoolean(2)))
+    assert(got.toSeq == Seq(
+      ("a", false, false), ("a", false, false),
+      ("a", false, true), ("a", false, false),
+      ("b", false, false), ("b", false, false),
+      ("b", true, false), ("b", false, false)))
+    assert(signals.select("ma_side").collect().map(_.getInt(0)).toSeq ==
+      Seq(0, 0, -1, 0, 0, 0, 1, 0))
+    // the backtest fold consumes the same decision: no open on "a"
+    val opened = operators.Backtest.positions(df,
+        operators.Backtest.Config(shortN = 2, longN = 3))
+      .collect().map(_.symbol).toSeq
+    assert(opened == Seq("b"))
+  }
+
   test("headK keeps first K per symbol chronologically") {
     val df = candleFrame(Map(
       "a" -> Seq(1.0, 2.0, 3.0), "b" -> Seq(9.0, 8.0)))

@@ -24,10 +24,11 @@ import sys
 
 # Instrument break (r16): the bench sink moved from count() to
 # format("noop") in round 16. Under count(), column pruning DELETED
-# these queries' Window/join operators (CountPlan audit) and every
-# group-by's aggregate VALUE expressions, so BENCH_r01..r15 per-query
-# numbers under-measure them. Comparisons that straddle the break are
-# flagged; BENCH_r16.json is the first honest anchor.
+# these queries' Window/join operators (SCALE.md r16, "Bench honesty
+# fix"; PlanShapeSpec's "bench instrument pin" now guards the sink)
+# and every group-by's aggregate VALUE expressions, so BENCH_r01..r15
+# per-query numbers under-measure them. Comparisons that straddle the
+# break are flagged; BENCH_r16.json is the first honest anchor.
 NOOP_SINK_SINCE_ROUND = 16
 COUNT_PRUNED_QUERIES = {
     # lost a Window (or the whole as-of sort) under count()
